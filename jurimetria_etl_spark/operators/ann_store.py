@@ -67,6 +67,7 @@ from jurimetria_etl_spark.operators.similarity import (
     dequantize_embeddings_int8,
     quantize_embeddings_int8,
 )
+from jurimetria_etl_spark.session import local_frame
 
 _CENTROIDS_FILE = "_CENTROIDS.json"
 
@@ -656,7 +657,8 @@ def ann_ivf_topk_store_batch(
         cs = _nearest_cells_py([float(x) for x in vec], centroids, n_probe)
         union.update(cs)
         exploded.extend((qid, vec, c) for c in cs)
-    probe_cells = spark.createDataFrame(
+    probe_cells = local_frame(
+        spark,
         exploded,
         StructType(
             list(base_schema.fields)

@@ -21,6 +21,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from jurimetria_etl_spark.session import local_frame
+
 
 def widen_partitions(df: DataFrame, min_partitions: int | None = None) -> DataFrame:
     """Repartition up to cluster width before a CPU-dense narrow stage.
@@ -592,7 +594,7 @@ def near_dup_clusters(
       via ``toPandas``, ≈ 8 MB for integer ids and tens of MB for string
       ids; there is no per-Row Python-object overhead on the driver, the
       transient cost is two flat arrays plus the union-find dict): collect,
-      path-compressing union-find, one createDataFrame back.  The pair
+      path-compressing union-find, one local frame back.  The pair
       graph of a near-dup pass is verified-duplicate EDGES — orders of
       magnitude smaller than the corpus even at 100 TB — so this is the
       common case, and it replaces ~3×(join+agg+checkpoint+action) rounds
@@ -653,8 +655,8 @@ def near_dup_clusters(
         # keep the operator generic over id types (string/decimal ids
         # must not behave differently below vs above the threshold)
         id_type = pairs.schema[left_col].dataType.simpleString()
-        return spark.createDataFrame(
-            rows, f"id {id_type}, {cluster_col} {id_type}"
+        return local_frame(
+            spark, rows, f"id {id_type}, {cluster_col} {id_type}"
         )
     # Over-bound path: the pair plan is referenced twice below (both
     # union branches), so persist it for the edge materialization only.

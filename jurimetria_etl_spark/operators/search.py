@@ -43,6 +43,8 @@ from dataclasses import dataclass
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from jurimetria_etl_spark.session import local_frame
+
 # Unicode letter/number classes, NOT [^a-z0-9]: the reference's corpus
 # is Brazilian judicial Portuguese (jurimetria_pipeline.py:163-179 —
 # "Ação de Indenização", accented class/subject names), and an ASCII
@@ -410,8 +412,8 @@ def append_text_index(
     )
     if batch is not None:
         key, n_docs, sum_dl = batch
-        spark = docs.sparkSession
-        spark.createDataFrame(
+        local_frame(
+            docs.sparkSession,
             [(key, n_docs, sum_dl)],
             "batch_key string, n_docs bigint, sum_dl bigint",
         ).write.mode("append").parquet(store_data_dir(f"{index_dir}/stats"))

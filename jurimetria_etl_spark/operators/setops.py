@@ -13,6 +13,8 @@ from functools import reduce
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
 
+from jurimetria_etl_spark.session import local_frame
+
 
 def union_all_by_name(
     dfs: list[DataFrame],
@@ -26,7 +28,7 @@ def union_all_by_name(
     if not dfs:
         if spark is None or schema is None:
             raise ValueError("empty input requires spark + schema for the empty frame")
-        return spark.createDataFrame([], schema)
+        return local_frame(spark, [], schema)
     return reduce(
         lambda a, b: a.unionByName(b, allowMissingColumns=allow_missing_columns), dfs
     )

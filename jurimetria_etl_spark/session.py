@@ -11,15 +11,31 @@ Design notes (SURVEY.md §4, §7):
 - ``spark.sql.shuffle.partitions`` defaults to the local core count (the
   driver harness runs local[N]); on a real cluster this is overridden by AQE's
   coalescing with ``initialPartitionNum`` headroom.
+- Python tasks carry a fixed cost far above their work on small data: a
+  warm 2-task ``parallelize(range(4), 2).map(f).count()`` took 0.28 s
+  against 0.04 s for the same job in the JVM (4-CPU host, CPython 3.11.7),
+  and 0.14-0.22 s of it was ``importlib.invalidate_caches()`` re-parsing
+  every cached zip archive (``pyspark.zip``, the spark-core jar) on every
+  task, which CPython 3.12 made lazy (gh-103200).  Local sessions
+  therefore run their workers under ``_pydaemon.py``, which re-reads an
+  archive only when it changed (about 0.13 s for that job); cluster
+  masters keep the stock daemon, since executors may lack this package.
+  ``local_frame`` removes the other source, the Python stages that
+  ``createDataFrame(<list>)`` frames add to every scan.  The benchmark's
+  ``task_cpu_s`` counts JVM CPU only: a span whose run time far exceeds
+  its CPU time is Python-bound.  SCALE.md has the measurements.
 """
 
 from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+# the directory holding this package: workers import the daemon from it
+_PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def get_spark(
@@ -88,10 +104,49 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(32 * 1024 * 1024))
     )
+    if master is None and not SparkSession.getActiveSession():
+        master = f"local[{cpus}]"
     if master is not None:
         builder = builder.master(master)
-    elif not SparkSession.getActiveSession():
-        builder = builder.master(f"local[{cpus}]")
+        if master.startswith("local"):
+            # Stat-guarded zip refresh for the Python workers (_pydaemon.py);
+            # cluster executors may not have this package, so only local.
+            builder = builder.config(
+                "spark.python.daemon.module", "jurimetria_etl_spark._pydaemon"
+            ).config("spark.executorEnv.PYTHONPATH", _PACKAGE_ROOT)
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+def local_frame(
+    spark: SparkSession, rows, schema: StructType | str
+) -> DataFrame:
+    """A DataFrame from rows the driver holds (tuples, ``Row``s or dicts).
+
+    ``spark.createDataFrame(<list>)`` plans as ``Scan ExistingRDD``, and
+    every scan of it runs one Python ``map`` task per partition.  The same
+    rows sent as a ``pyarrow.Table`` plan as ``LocalTableScan``: no Python
+    tasks, 0.12 s against 0.38 s per use on a 4-CPU host.  Values go
+    through ``schema.toInternal`` first, so timestamps and dates mean what
+    they mean to ``createDataFrame``.
+    """
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    if isinstance(schema, str):
+        schema = StructType.fromDDL(schema)
+    arrow_schema = to_arrow_schema(schema)
+    internal = [schema.toInternal(r) for r in rows]
+    columns = list(zip(*internal, strict=True)) or [()] * len(schema.fields)
+    table = pa.Table.from_arrays(
+        [
+            pa.array(c, type=t)
+            for c, t in zip(columns, arrow_schema.types, strict=True)
+        ],
+        schema=arrow_schema,
+    )
+    for f, col in zip(schema.fields, table.columns):
+        if not f.nullable and col.null_count:
+            raise ValueError(f"column {f.name!r} is not nullable")
+    return spark.createDataFrame(table, schema=schema)

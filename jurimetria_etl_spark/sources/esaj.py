@@ -23,6 +23,7 @@ from typing import Any
 from pyspark.sql import DataFrame, SparkSession
 
 from jurimetria_etl_spark.schemas import ESAJ_ROW_SCHEMA
+from jurimetria_etl_spark.session import local_frame
 
 # transport(url, params) -> (status_code, text_or_json)
 HtmlTransport = Callable[[str, dict[str, Any]], tuple[int, str]]
@@ -161,7 +162,7 @@ def esaj_scan(
     rows = fetch_esaj_rows(
         transport, base_url, max_pages, params=params or esaj_query()
     )
-    return spark.createDataFrame(rows or [], ESAJ_ROW_SCHEMA)
+    return local_frame(spark, rows, ESAJ_ROW_SCHEMA)
 
 
 def fetch_datajud_stats(

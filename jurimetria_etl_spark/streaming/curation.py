@@ -32,6 +32,7 @@ from jurimetria_etl_spark.operators.dedup import (
     fingerprint,
     minhash_dedup_incremental,
 )
+from jurimetria_etl_spark.session import local_frame
 
 DOCS_SCHEMA = "doc_id long, source string, lang string, text string"
 
@@ -71,7 +72,7 @@ def _read_or_empty(spark: SparkSession, path: str, schema: str) -> DataFrame:
         return df
     except AnalysisException as e:
         if "PATH_NOT_FOUND" in str(e) or "Path does not exist" in str(e):
-            return spark.createDataFrame([], schema)
+            return local_frame(spark, [], schema)
         raise
 
 
@@ -93,7 +94,8 @@ def _append_audit(
     (manifest-resolved like every other store append)."""
     from jurimetria_etl_spark.sinks.maintenance import store_data_dir
 
-    spark.createDataFrame(
+    local_frame(
+        spark,
         [(int(batch_id), int(n_in), int(n_gated), int(n_fresh), int(n_kept))],
         _AUDIT_SCHEMA,
     ).coalesce(1).write.mode("append").parquet(store_data_dir(audit_dir))

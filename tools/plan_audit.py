@@ -200,7 +200,27 @@ AUDITED = [
 ]
 
 
-def summarize(plan: str) -> list[str]:
+def python_rdd_scans(jplan) -> int:
+    """``Scan ExistingRDD`` nodes fed by a Python RDD in a JVM physical plan
+    (cached and subquery plans included).  A frame built by
+    ``spark.createDataFrame(<python list>)`` scans this way and runs one
+    Python task per partition on every use (``session.local_frame`` builds
+    a ``LocalTableScan`` instead).  JVM-side RDD scans, such as
+    ``localCheckpoint`` frames, are not counted."""
+    n, stack = 0, [jplan]
+    while stack:
+        node = stack.pop()
+        if node.nodeName() == "AdaptiveSparkPlan":
+            node = node.inputPlan()
+        if node.nodeName().startswith("Scan ExistingRDD"):
+            n += "PythonRDD" in node.rdd().toDebugString()
+        # innerChildren holds subquery plans and a cached relation's plan
+        for seq in (node.children(), node.innerChildren()):
+            stack.extend(seq.apply(i) for i in range(seq.size()))
+    return n
+
+
+def summarize(plan: str, jplan) -> list[str]:
     out = []
     pushed = re.findall(r"PushedFilters: \[([^\]]*)\]", plan)
     nonempty = [p for p in pushed if p.strip()]
@@ -218,8 +238,11 @@ def summarize(plan: str) -> list[str]:
     out.append(f"Exchange: {plan.count('Exchange')}")
     out.append(f"HashAggregate: {plan.count('HashAggregate')}")
     out.append(f"TakeOrderedAndProject: {plan.count('TakeOrderedAndProject')}")
-    py = plan.count("BatchEvalPython") + plan.count("ArrowEvalPython") + plan.count(
-        "MapInPandas"
+    py = (
+        plan.count("BatchEvalPython")
+        + plan.count("ArrowEvalPython")
+        + plan.count("MapInPandas")
+        + python_rdd_scans(jplan)
     )
     out.append(f"python nodes: {py}")
     return out
@@ -249,10 +272,11 @@ def main(sf_dir: str) -> None:
     print(f"Generated against `{sf_dir}` — `python tools/plan_audit.py`.\n")
     for name, intent in AUDITED:
         df = registry[name].spark(spark, sf_dir)
-        plan = df._jdf.queryExecution().executedPlan().toString()
+        jplan = df._jdf.queryExecution().executedPlan()
+        plan = jplan.toString()
         print(f"## {name}\n")
         print(f"*Intent:* {intent}\n")
-        print("Summary: " + " · ".join(summarize(plan)) + "\n")
+        print("Summary: " + " · ".join(summarize(plan, jplan)) + "\n")
         # Head-trim for readability, but NEVER trim away a scan: every
         # FileScan line beyond the head is appended verbatim, so a
         # section whose intent claims a scan property (PartitionFilters
